@@ -7,7 +7,7 @@ so no external data is involved).
 
 ``queries()`` exposes one entry per implemented operator from
 SURVEY.md §2 plus the training-data extras (dedup / similarity / text
-stats / multimodal); ``oracle_sql()`` provides an exact DuckDB
+stats); ``oracle_sql()`` provides an exact DuckDB
 equivalent for EVERY query.  The kernel-driven extraction queries
 (pandas-UDF cascade) are not SQL-expressible directly, so their oracle
 reads the committed golden parquet that pins entry()'s exact output
@@ -1198,157 +1198,6 @@ def _q_sim_semantic_clusters(spark, sf_dir):
     return dedup.connected_components(pairs, nodes).orderBy("node")
 
 
-def _q_multimodal_real_decode(spark, sf_dir):
-    """REAL binary image decode through the seam, driver-gated: 60
-    genuine binary-PPM payloads, (r5) 30 genuine zlib-compressed PNGs
-    cycling all five scanline filters PLUS Adam7 interlacing (odd i)
-    and palette encoding (i % 3 == 0), (r5) 30 genuine baseline JPEGs
-    (entropy-coded: Huffman + DCT + 4:2:0 subsampling + restart
-    markers), and (r5) 30 genuine PROGRESSIVE SOF2 JPEGs (multi-scan
-    spectral selection + successive approximation: DC first/refine,
-    AC first/refine), all in the codec's bit-exact flat-quantizer
-    regime.  PPM/PNG
-    pixel bytes follow one generative formula (byte k of image i =
-    (i*7 + k) % 256); JPEG images are constant per 8x8 block with tile
-    colors from a formula, so their decode equals one integer YCbCr
-    roundtrip the oracle replays from spec literals.  All decoded on
-    executors by the dependency-free codecs
-    (operators/codecs.image_feature) while the DuckDB oracle derives
-    the SAME statistics independently — it never parses the binary, so
-    header/offset/de-interleave/unfilter/entropy-decode bugs in the
-    codecs cannot hide.  (PNG/JPEG n_bytes alone come from the encoder
-    at oracle-generation time — container length is not
-    formula-derivable through zlib/Huffman; the decode statistics stay
-    fully independent.)  Floats are float32-quantized on both sides
-    (::REAL::DOUBLE in SQL, the codec's np.float32 on Spark) before
-    round(6), absorbing summation-order ULP differences."""
-    from webtext_extraction_spark.operators.codecs import image_feature
-    from webtext_extraction_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_media_features,
-    )
-
-    rows = []
-    for i, w, h, payload in _real_decode_payloads():
-        fmt = (
-            "png" if payload[:2] == b"\x89P"
-            else "jpeg" if payload[:2] == b"\xff\xd8"
-            else "gif" if payload[:4] == b"GIF8"
-            else "ppm"
-        )
-        rows.append((i, "image", bytearray(payload), w, h, fmt, 1))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = extract_media_features(media, decode_stub=False, decoder=image_feature)
-    cols = ["f_w", "f_h", "mean_r", "mean_g", "mean_b", "std_luma", "aspect", "fill_ratio"]
-    return feats.select(
-        "media_id",
-        "n_bytes",
-        *[
-            F.round(F.element_at("feature", i + 1).cast("double"), 6).alias(c)
-            for i, c in enumerate(cols)
-        ],
-    ).orderBy("media_id")
-
-
-def _real_decode_payloads():
-    """Shared payload generator for the multimodal_real_decode gate:
-    (i, w, h, payload) for 60 formula-pixel PPMs, 30 formula-pixel
-    PNGs (filter_type = i % 5 — every unfilter path driver-gated),
-    and (r5) 30 baseline JPEGs in the codec's bit-exact regime (flat
-    quantizer 1, images constant per 8x8 block): j = i - 90 cycles
-    three classes — j%3==0 fully-constant color 4:2:0 at odd dims
-    (subsampled chroma + block padding), j%3==1 tiled color 4:4:4
-    (cross-block DC prediction, both diff signs), j%3==2 tiled
-    grayscale with restart_interval=1 (RSTn markers + predictor
-    resets, no color conversion).  Tile t's color is base =
-    (i*7 + 13*t) % 256 → (base, base+85, base+170) mod 256 — the
-    oracle replays the integer YCbCr roundtrip in SQL.  Used by the
-    Spark query AND by oracle_sql() for the PNG/JPEG byte lengths."""
-    import numpy as np
-
-    from webtext_extraction_spark.operators.codecs import (
-        encode_gif,
-        encode_jpeg,
-        encode_png,
-    )
-
-    out = []
-    for i in range(90):
-        w, h = 8 + i % 9, 4 + i % 7
-        pix = bytes((i * 7 + k) % 256 for k in range(w * h * 3))
-        if i < 60:
-            payload = b"P6\n%d %d\n255\n" % (w, h) + pix
-        else:
-            # r5: cycle Adam7 interlacing and palette encoding through
-            # the same formula pixels — identical decode statistics,
-            # so the oracle derivation is untouched (only the
-            # encoder-derived byte lengths change)
-            arr = np.frombuffer(pix, dtype=np.uint8).reshape((h, w, 3))
-            payload = encode_png(
-                arr,
-                filter_type=i % 5,
-                interlace=i % 2 == 1,
-                palette=i % 3 == 0,  # <= 160 pixels -> palette fits
-            )
-        out.append((i, w, h, payload))
-    for i in range(90, 150):
-        # 90-119 baseline (SOF0); 120-149 PROGRESSIVE (SOF2) — same
-        # class/dim/color formulas keyed on j = (i - 90) % 30, so the
-        # oracle's derivation extends by widening one generate_series
-        j = (i - 90) % 30
-        prog = i >= 120
-        cls, k = j % 3, (j // 3) % 3
-        if cls == 0:
-            w, h = 9 + ((j // 3) % 4) * 2, 5 + k * 2
-            base = (i * 7) % 256
-            img = np.zeros((h, w, 3), np.uint8)
-            img[:] = (base, (base + 85) % 256, (base + 170) % 256)
-            payload = encode_jpeg(
-                img, quant=1, subsampling="420", restart_interval=2,
-                progressive=prog,
-            )
-        elif cls == 1:
-            w, h = 16, 8 * (1 + k)
-            nx, ny = 2, 1 + k
-            img = np.zeros((h, w, 3), np.uint8)
-            for ty in range(ny):
-                for tx in range(nx):
-                    base = (i * 7 + 13 * (ty * nx + tx)) % 256
-                    img[ty * 8 : ty * 8 + 8, tx * 8 : tx * 8 + 8] = (
-                        base, (base + 85) % 256, (base + 170) % 256,
-                    )
-            payload = encode_jpeg(img, quant=1, progressive=prog)
-        else:
-            w, h = 8 * (1 + k), 16
-            nx, ny = 1 + k, 2
-            gray = np.zeros((h, w), np.uint8)
-            for ty in range(ny):
-                for tx in range(nx):
-                    gray[ty * 8 : ty * 8 + 8, tx * 8 : tx * 8 + 8] = (
-                        i * 7 + 13 * (ty * nx + tx)
-                    ) % 256
-            payload = encode_jpeg(gray, quant=1, restart_interval=1, progressive=prog)
-        out.append((i, w, h, payload))
-    for i in range(150, 180):
-        # r5: 30 genuine LZW-compressed GIFs over the SAME formula
-        # pixels as the PPM/PNG rows (consecutive bytes step by 3, so
-        # distinct colors <= pixel count <= 140 < 256 — the lossless
-        # palette always fits).  Odd i interlaces; i % 5 == 0 writes a
-        # 2-frame ANIMATION whose first frame carries the formula
-        # pixels (decode_image reads frame 0, so the statistics
-        # derivation is untouched) and whose second frame repeats
-        # pixel 0's color (palette unchanged).
-        w, h = 8 + i % 9, 4 + i % 7
-        pix = bytes((i * 7 + k) % 256 for k in range(w * h * 3))
-        arr = np.frombuffer(pix, dtype=np.uint8).reshape((h, w, 3))
-        if i % 5 == 0:
-            payload = encode_gif([arr, np.broadcast_to(arr[0, 0], arr.shape)])
-        else:
-            payload = encode_gif(arr, interlace=i % 2 == 1)
-        out.append((i, w, h, payload))
-    return out
-
-
 def _q_sim_hashed_bow(spark, sf_dir):
     """Feature-hashing text→vector bridge (similarity.py
     hashed_bow_embedding), driver-gated in exploded scalar form:
@@ -1677,232 +1526,18 @@ def _q_corpus_hll(spark, sf_dir):
     return est.join(exact, "source").orderBy("source")
 
 
-def _avi_payloads():
-    """Shared fixture generator for the multimodal_video_frames gate:
-    12 MJPEG AVI videos, video i holding 4 + (i % 5)*2 frames of
-    16x8 constant color (frame f: base = (i*11 + 29*f) % 256 →
-    (base, base+85, base+170) mod 256) — each frame a flat-quantizer
-    baseline JPEG, so decode is bit-exact and the oracle replays the
-    integer YCbCr roundtrip in SQL.  Returns (i, n_frames, payload)."""
-    import numpy as np
-
-    from webtext_extraction_spark.operators.codecs import encode_mjpeg_avi
-
-    out = []
-    for i in range(12):
-        nf = 4 + (i % 5) * 2
-        frames = []
-        for f in range(nf):
-            base = (i * 11 + 29 * f) % 256
-            img = np.zeros((8, 16, 3), np.uint8)
-            img[:] = (base, (base + 85) % 256, (base + 170) % 256)
-            frames.append(img)
-        out.append((i, nf, encode_mjpeg_avi(frames, fps=5)))
-    return out
-
-
-def _avi_byte_lens() -> str:
-    """SQL list literal of the 12 AVI container lengths (container
-    size is not formula-derivable through entropy coding — only len()
-    comes from the encoder; decode statistics stay independent)."""
-    return "[" + ", ".join(str(len(p)) for _, _, p in _avi_payloads()) + "]"
-
-
-def _gif_video_payloads():
-    """Animated-GIF half of the multimodal_video_frames gate (r5,
-    media_id 12-23): 12 LZW-compressed animations, video 12+i holding
-    3 + (i % 5)*2 frames (ODD counts — different sampling tails than
-    the AVI half) of 16x8 constant color (frame f of media_id m:
-    base = (m*13 + 31*f) % 256 → (base, base+85, base+170) mod 256).
-    GIF is LOSSLESS, so the oracle replays the raw color formula with
-    NO YCbCr roundtrip — the exact-decode counterpart to the AVI
-    rows' bit-exact-lossy regime.  Returns (media_id, n_frames,
-    payload)."""
-    import numpy as np
-
-    from webtext_extraction_spark.operators.codecs import encode_gif
-
-    out = []
-    for i in range(12):
-        m = 12 + i
-        nf = 3 + (i % 5) * 2
-        frames = []
-        for f in range(nf):
-            base = (m * 13 + 31 * f) % 256
-            img = np.zeros((8, 16, 3), np.uint8)
-            img[:] = (base, (base + 85) % 256, (base + 170) % 256)
-            frames.append(img)
-        out.append((m, nf, encode_gif(frames)))
-    return out
-
-
-def _gif_video_byte_lens() -> str:
-    """SQL list literal of the 12 animated-GIF container lengths."""
-    return "[" + ", ".join(str(len(p)) for _, _, p in _gif_video_payloads()) + "]"
-
-
-def _q_multimodal_video_frames(spark, sf_dir):
-    """REAL video frame sampling through the seam, driver-gated: 12
-    genuine MJPEG AVI containers (RIFF walk + per-frame baseline JPEG
-    decode, operators/codecs.video_frame_features) sampled at
-    every_n=3 — the fan-out depends on each container's ACTUAL frame
-    count, and only sampled frames are entropy-decoded — plus (r5) 12
-    genuine animated GIFs (media_id 12-23: LZW + GCE frame walk,
-    lossless, odd frame counts).  Frames are constant color; the
-    DuckDB oracle derives every statistic from the color formula
-    (+ the integer YCbCr roundtrip for the lossy AVI half only) and
-    never parses the binary."""
-    from webtext_extraction_spark.operators.codecs import video_frame_features
-    from webtext_extraction_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_video_frames,
-    )
-
-    rows = [
-        (i, "video", bytearray(payload), 16, 8, "mjpeg", nf)
-        for i, nf, payload in _avi_payloads()
-    ] + [
-        (m, "video", bytearray(payload), 16, 8, "gif", nf)
-        for m, nf, payload in _gif_video_payloads()
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = extract_video_frames(
-        media, every_n=3, decode_stub=False, decoder=video_frame_features
-    )
-    cols = ["f_w", "f_h", "mean_r", "mean_g", "mean_b", "std_luma", "aspect", "fill_ratio"]
-    return feats.select(
-        "media_id",
-        "frame_idx",
-        "n_frames",
-        "n_bytes",
-        *[
-            F.round(F.element_at("feature", i + 1).cast("double"), 6).alias(c)
-            for i, c in enumerate(cols)
-        ],
-    ).orderBy("media_id", "frame_idx")
-
-
-def _wav_payloads():
-    """Shared fixture generator for the multimodal_audio_decode gate:
-    10 16-bit PCM WAVs — audio i has n = 120 + 40*(i % 4) interleaved
-    samples, ch = 1 + i % 2 channels, rate = 8000 + 4000*(i % 3), and
-    sample k = ((i*37 + k*97) % 65536) - 32768 — so every statistic is
-    integer-formula-derivable in SQL.  Returns (i, payload)."""
-    import numpy as np
-
-    from webtext_extraction_spark.operators.codecs import encode_wav
-
-    out = []
-    for i in range(10):
-        n, ch = 120 + 40 * (i % 4), 1 + i % 2
-        rate = 8000 + 4000 * (i % 3)
-        s = np.array(
-            [((i * 37 + k * 97) % 65536) - 32768 for k in range(n)], np.int16
-        ).reshape(-1, ch)
-        out.append((i, encode_wav(s, rate)))
-    return out
-
-
-def _wav_byte_lens() -> str:
-    return "[" + ", ".join(str(len(p)) for _, p in _wav_payloads()) + "]"
-
-
-def _q_multimodal_audio_decode(spark, sf_dir):
-    """REAL audio decode through the seam, driver-gated: 10 genuine
-    16-bit PCM WAV containers decoded on executors
-    (operators/codecs.audio_feature via the media_feature dispatcher)
-    while the DuckDB oracle derives rms / peak / zero-crossing rate /
-    DC offset / fill from the sample formula in integer arithmetic —
-    it never parses the binary, so fmt/data/interleave bugs cannot
-    hide.  Completes the modality triple (image r4, video+audio r5)."""
-    from webtext_extraction_spark.operators.codecs import media_feature
-    from webtext_extraction_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_media_features,
-    )
-
-    rows = [
-        (i, "audio", bytearray(payload), 0, 0, "pcm16", 0)
-        for i, payload in _wav_payloads()
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = extract_media_features(media, decode_stub=False, decoder=media_feature)
-    cols = ["dur", "rate", "chans", "rms", "peak", "zcr", "dc", "fill"]
-    return feats.select(
-        "media_id",
-        "n_bytes",
-        *[
-            F.round(F.element_at("feature", i + 1).cast("double"), 6).alias(c)
-            for i, c in enumerate(cols)
-        ],
-    ).orderBy("media_id")
-
-
-def _q_multimodal_features(spark, sf_dir):
-    """Gate-checkable shape: scalar columns only (the driver's
-    canonicalizer cannot hash array cells).  The float features coming
-    out of the mapInPandas UDF are u16/65535 float32s, so
-    round(f*65535) recovers the exact integers the oracle rebuilds
-    from the md5 hexdigest."""
-    from webtext_extraction_spark.operators.multimodal import (
-        extract_media_features,
-        synth_media,
-    )
-
-    media = synth_media(spark, n=64)
-    feats = extract_media_features(media)
-    u16_strs = F.transform(
-        F.col("feature"), lambda x: F.round(x * 65535).cast("int").cast("string")
-    )
-    return feats.select(
-        "media_id",
-        "modality",
-        "n_bytes",
-        F.md5(F.concat_ws(",", u16_strs)).alias("feature_hash"),
-    ).orderBy("media_id")
-
-
-def _q_multimodal_resize(spark, sf_dir):
-    from webtext_extraction_spark.operators.multimodal import (
-        resize_media,
-        synth_media,
-    )
-
-    media = synth_media(spark, n=64)
-    resized = resize_media(media, target_width=224, target_height=224)
-    return resized.select(
-        "media_id",
-        "modality",
-        "meta_width",
-        "meta_height",
-        F.length("payload").cast("int").alias("n_bytes"),
-        F.md5(F.col("payload")).alias("payload_md5"),
-    ).orderBy("media_id")
-
-
-def _q_multimodal_frame_sample(spark, sf_dir):
-    from webtext_extraction_spark.operators.multimodal import (
-        frame_sample_plan,
-        synth_media,
-    )
-
-    media = synth_media(spark, n=64)
-    return frame_sample_plan(media, every_n=10).orderBy("media_id", "frame_idx")
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver's per-round correctness snapshot keeps
-    # the FIRST ~50 entries in dict order (verified: CORRECTNESS_r04's
-    # 50 keys are exactly the first 50 of the r4 dict).  Entries are
-    # therefore ordered so the window covers, in priority order:
-    # (1) the flagship trio, (2) this round's new entry, (3) queries
-    # that have never had a driver row (corpus_split, sim_ann_recall,
-    # sim_semantic_clusters, multimodal_real_decode — never checked
-    # through r4), (4) the 10 rows rotated out of the r4 snapshot
-    # (green in r3), then the heavier operators.  The entries past
-    # position 50 (incl. dedup_exact/dedup_simhash, rotated late-r5
-    # for the bloom pair) all hold green CORRECTNESS_r04 rows, so
-    # r5 ∪ r4 ∪ r3 covers every query.  Revisit each round.
+    # ORDER MATTERS: the per-round correctness snapshot
+    # (CORRECTNESS_r0N.json) keeps the FIRST ~50 entries in dict order
+    # (verified: CORRECTNESS_r04's 50 keys are exactly the first 50 of
+    # the r4 dict).  The window holds, in order: the flagship trio, the
+    # entries first checked by a snapshot in r5
+    # (dedup_remove_duplicate_spans, corpus_split, sim_ann_recall,
+    # sim_semantic_clusters), the sim_* / curation rows, the r5
+    # operators, and finally dedup_exact, dedup_simhash and
+    # text_repetition.  Every entry past position 50 holds a green row
+    # in an earlier snapshot, so the union of rounds covers every
+    # query.  Run scripts/coverage_matrix.py after any reorder.
     return {
         "extract_flagship": _q_extract_flagship,
         "extract_summary": _q_extract_summary,
@@ -1911,7 +1546,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_split": _q_corpus_split,
         "sim_ann_recall": _q_sim_ann_recall,
         "sim_semantic_clusters": _q_sim_semantic_clusters,
-        "multimodal_real_decode": _q_multimodal_real_decode,
         "sim_cosine_topk": _q_sim_cosine_topk,
         "sim_lsh_ann_topk": _q_sim_lsh_ann_topk,
         "sim_cosine_int8": _q_sim_cosine_int8,
@@ -1952,15 +1586,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_cms": _q_corpus_cms,
         "text_tfidf": _q_text_tfidf,
         "text_inverted_index": _q_text_inverted_index,
-        "multimodal_video_frames": _q_multimodal_video_frames,
-        "multimodal_audio_decode": _q_multimodal_audio_decode,
-        "multimodal_features": _q_multimodal_features,
-        "multimodal_frame_sample": _q_multimodal_frame_sample,
-        "multimodal_resize": _q_multimodal_resize,
-        # --- position 51+: r4-green rows rotated out this round ---
         "dedup_exact": _q_dedup_exact,
         "dedup_simhash": _q_dedup_simhash,
         "text_repetition": _q_text_repetition,
+        # --- position 51+: green snapshot rows from r4 or earlier ---
         "conv_training_pairs": _q_conv_training_pairs,
         "u3_set_difference": _q_u3_set_difference,
         "j2_anti_join": _q_j2_anti_join,
@@ -2090,12 +1719,12 @@ def _unigram_lp_ctes(score_where: str) -> str:
               FROM toks t LEFT JOIN freqs f USING (th)),
             agg AS (
               SELECT _id, count(*)::INT AS n_tokens,
-                     list(lp ORDER BY th, lp) AS tl
+                     sum(round(lp * 1000000)::BIGINT) AS s
               FROM scored GROUP BY _id),
             lpt AS (
               SELECT _id, n_tokens,
-                     round(list_reduce(tl, (a, b) -> a + b) / n_tokens,
-                           6)::DOUBLE AS logprob_mean
+                     (sign(s) * ((2 * abs(s) + n_tokens) // (2 * n_tokens)))::DOUBLE
+                       / 1000000 AS logprob_mean
               FROM agg)"""
 
 
@@ -2187,34 +1816,6 @@ def _bucket_sql(vec: str, num_planes: int = 4, dim: int = 64) -> str:
             f"(case when list_dot_product({vec}, {plane}) > 0 then {1 << i} else 0 end)"
         )
     return " + ".join(parts)
-
-
-def _png_byte_lens() -> str:
-    """SQL list literal of the 30 PNG payload lengths for the
-    multimodal_real_decode oracle (media_id 60-89)."""
-    return "[" + ", ".join(
-        str(len(p)) for i, w, h, p in _real_decode_payloads() if 60 <= i < 90
-    ) + "]"
-
-
-def _jpeg_byte_lens() -> str:
-    """SQL list literal of the 60 JPEG payload lengths for the
-    multimodal_real_decode oracle (media_id 90-149) — like the PNG
-    lengths, container size is not formula-derivable through entropy
-    coding, so only len() comes from the encoder; every decode
-    statistic stays independently derived."""
-    return "[" + ", ".join(
-        str(len(p)) for i, w, h, p in _real_decode_payloads() if 90 <= i < 150
-    ) + "]"
-
-
-def _gif_byte_lens() -> str:
-    """SQL list literal of the 30 GIF payload lengths for the
-    multimodal_real_decode oracle (media_id 150-179) — container size
-    is not formula-derivable through LZW, same policy as PNG/JPEG."""
-    return "[" + ", ".join(
-        str(len(p)) for i, w, h, p in _real_decode_payloads() if i >= 150
-    ) + "]"
 
 
 def oracle_sql() -> dict[str, str]:
@@ -3689,113 +3290,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT node::BIGINT AS node, min(label)::BIGINT AS component
             FROM reach GROUP BY node ORDER BY node
         """,
-        # rebuilds synth_media's ASCII payloads + _fake_feature's
-        # md5→uint16-LE derivation entirely in SQL (multimodal.py:60-85)
-        # real-decode oracle: derives every statistic from the pixel
-        # GENERATIVE FORMULA (byte k of image i = (i*7+k) % 256) — an
-        # independent derivation that never touches the binary payload
-        # the Spark-side codec actually parses
-        # pixel statistics derive from the generative formula for ALL
-        # 90 images (PPM + PNG alike — the oracle never parses binary);
-        # only the 30 PNG container lengths are embedded from the
-        # encoder, since zlib output size is not formula-derivable
-        "multimodal_real_decode": f"""
-            WITH imgs AS (
-              -- 0-59 PPM, 60-89 PNG, 150-179 GIF: one shared pixel
-              -- formula (the GIF rows reuse it because consecutive
-              -- bytes step by 3 -> <= 140 distinct colors, palette
-              -- always fits losslessly)
-              SELECT i AS media_id, (8 + i % 9)::INT AS w, (4 + i % 7)::INT AS h
-              FROM (SELECT unnest(list_concat(
-                      generate_series(0, 89),
-                      generate_series(150, 179))) AS i)),
-            px AS (
-              SELECT media_id, w, h,
-                     ((media_id * 7 + k) % 256) / 255.0 AS r,
-                     ((media_id * 7 + k + 1) % 256) / 255.0 AS g,
-                     ((media_id * 7 + k + 2) % 256) / 255.0 AS b
-              FROM imgs, unnest(generate_series(0, w * h * 3 - 1, 3)) AS t(k)),
-            stats AS (
-              SELECT media_id, w, h,
-                     avg(r) AS mean_r, avg(g) AS mean_g, avg(b) AS mean_b,
-                     stddev_pop(0.299 * r + 0.587 * g + 0.114 * b) AS std_luma,
-                     avg(CASE WHEN greatest(r, g, b) > 0 THEN 1.0 ELSE 0.0 END)
-                       AS fill_ratio
-              FROM px GROUP BY media_id, w, h),
-            -- JPEG fixtures (media_id 90-119): images constant per 8x8
-            -- block in the codec's bit-exact flat-quantizer regime, so
-            -- the decode equals ONE integer YCbCr roundtrip replayed
-            -- here from its spec literals (half-UP rounding on both
-            -- sides); cls 2 is grayscale (no conversion, channel lift)
-            -- media_id 90-119 baseline, 120-149 progressive: SAME
-            -- dim/tile formulas keyed on j % 30 (colors key on the
-            -- media_id itself, so each file has its own colors)
-            jdims AS (
-              SELECT (90 + j)::BIGINT AS media_id, j % 3 AS cls,
-                     ((j % 30) // 3) % 3 AS k,
-                     (CASE j % 3 WHEN 0 THEN 9 + (((j % 30) // 3) % 4) * 2
-                       WHEN 1 THEN 16
-                       ELSE 8 * (1 + ((j % 30) // 3) % 3) END)::INT AS w,
-                     (CASE j % 3 WHEN 0 THEN 5 + (((j % 30) // 3) % 3) * 2
-                       WHEN 1 THEN 8 * (1 + ((j % 30) // 3) % 3)
-                       ELSE 16 END)::INT AS h,
-                     CASE WHEN j % 3 = 0 THEN 1
-                       ELSE 2 * (1 + ((j % 30) // 3) % 3) END AS nt
-              FROM (SELECT unnest(generate_series(0, 59)) AS j)),
-            jtiles AS (
-              SELECT media_id, cls, w, h,
-                     (media_id * 7 + 13 * t) % 256 AS r0,
-                     (media_id * 7 + 13 * t + 85) % 256 AS g0,
-                     (media_id * 7 + 13 * t + 170) % 256 AS b0
-              FROM jdims, unnest(generate_series(0, nt - 1)) AS u(t)),
-            jyc AS (
-              SELECT media_id, cls, w, h, r0, g0, b0,
-                least(255, greatest(0, floor(
-                  0.299 * r0 + 0.587 * g0 + 0.114 * b0 + 0.5))) AS yy,
-                least(255, greatest(0, floor(
-                  -0.168736 * r0 - 0.331264 * g0 + 0.5 * b0 + 128 + 0.5))) AS cb,
-                least(255, greatest(0, floor(
-                  0.5 * r0 - 0.418688 * g0 - 0.081312 * b0 + 128 + 0.5))) AS cr
-              FROM jtiles),
-            jrgb AS (
-              SELECT media_id, w, h,
-                (CASE WHEN cls = 2 THEN r0 ELSE least(255, greatest(0, floor(
-                  yy + 1.402 * (cr - 128) + 0.5))) END) / 255.0 AS r,
-                (CASE WHEN cls = 2 THEN r0 ELSE least(255, greatest(0, floor(
-                  yy - 0.344136 * (cb - 128) - 0.714136 * (cr - 128) + 0.5
-                  ))) END) / 255.0 AS g,
-                (CASE WHEN cls = 2 THEN r0 ELSE least(255, greatest(0, floor(
-                  yy + 1.772 * (cb - 128) + 0.5))) END) / 255.0 AS b
-              FROM jyc),
-            jstats AS (
-              SELECT media_id, w, h,
-                     avg(r) AS mean_r, avg(g) AS mean_g, avg(b) AS mean_b,
-                     stddev_pop(0.299 * r + 0.587 * g + 0.114 * b) AS std_luma,
-                     avg(CASE WHEN greatest(r, g, b) > 0 THEN 1.0 ELSE 0.0 END)
-                       AS fill_ratio
-              FROM jrgb GROUP BY media_id, w, h),
-            allstats AS (
-              SELECT * FROM stats UNION ALL SELECT * FROM jstats)
-            SELECT media_id,
-                   (CASE WHEN media_id < 60 THEN
-                      9 + len(w::VARCHAR) + len(h::VARCHAR) + 3 * w * h
-                    WHEN media_id < 90 THEN
-                      list_extract({_png_byte_lens()}, media_id - 59)
-                    WHEN media_id >= 150 THEN
-                      list_extract({_gif_byte_lens()}, media_id - 149)
-                    ELSE list_extract({_jpeg_byte_lens()}, media_id - 89)
-                    END)::INT
-                     AS n_bytes,
-                   round((least(w / 4096.0, 1.0))::REAL::DOUBLE, 6) AS f_w,
-                   round((least(h / 4096.0, 1.0))::REAL::DOUBLE, 6) AS f_h,
-                   round(mean_r::REAL::DOUBLE, 6) AS mean_r,
-                   round(mean_g::REAL::DOUBLE, 6) AS mean_g,
-                   round(mean_b::REAL::DOUBLE, 6) AS mean_b,
-                   round(std_luma::REAL::DOUBLE, 6) AS std_luma,
-                   round((w * 1.0 / (w + h))::REAL::DOUBLE, 6) AS aspect,
-                   round(fill_ratio::REAL::DOUBLE, 6) AS fill_ratio
-            FROM allstats ORDER BY media_id
-        """,
         # Count-Min sketch: per-row md5(term#i) buckets, integer
         # cells, min-over-rows estimate — no float anywhere, so the
         # probabilistic structure replays bit-exactly
@@ -4349,170 +3843,6 @@ def oracle_sql() -> dict[str, str]:
               ON a.bucket = b.bucket AND a.doc_id < b.doc_id
             WHERE {_COSINE.format(a="a.embedding", b="b.embedding")} >= 0.8
             ORDER BY id_a, id_b
-        """,
-        # real WAV PCM decode: every statistic derives from the sample
-        # formula s_k = ((i*37 + k*97) % 65536) - 32768 in integer
-        # aggregates (sum, sum of squares, sign-boundary crossings),
-        # mirroring audio_feature's float shapes; only container byte
-        # lengths come from the encoder
-        "multimodal_audio_decode": f"""
-            WITH auds AS (
-              SELECT i::BIGINT AS media_id,
-                     (120 + 40 * (i % 4)) AS n,
-                     (1 + i % 2) AS ch,
-                     (8000 + 4000 * (i % 3)) AS rate
-              FROM (SELECT unnest(generate_series(0, 9)) AS i)),
-            smp AS (
-              SELECT media_id, n, ch, rate, t.k,
-                     ((media_id * 37 + t.k * 97) % 65536) - 32768 AS s
-              FROM auds, unnest(generate_series(0, n - 1)) AS t(k)),
-            agg AS (
-              SELECT media_id, n, ch, rate,
-                     sum(s * s) AS ss, sum(s) AS s1,
-                     max(abs(s)) AS pk,
-                     sum(CASE WHEN s <> 0 THEN 1 ELSE 0 END) AS nz
-              FROM smp GROUP BY media_id, n, ch, rate),
-            ch0 AS (
-              SELECT media_id,
-                     CASE WHEN (s >= 0) <>
-                       (lag(s >= 0) OVER (PARTITION BY media_id ORDER BY k))
-                       THEN 1 ELSE 0 END AS x
-              FROM smp WHERE k % ch = 0),
-            zc AS (SELECT media_id, sum(x) AS crossings FROM ch0
-                   GROUP BY media_id)
-            SELECT a.media_id,
-                   list_extract({_wav_byte_lens()}, a.media_id + 1)::INT
-                     AS n_bytes,
-                   round((least((n / ch) / rate / 3600.0, 1.0))::REAL::DOUBLE, 6)
-                     AS dur,
-                   round((least(rate / 96000.0, 1.0))::REAL::DOUBLE, 6) AS rate,
-                   round((least(ch / 8.0, 1.0))::REAL::DOUBLE, 6) AS chans,
-                   round((sqrt(ss::DOUBLE / n) / 32768.0)::REAL::DOUBLE, 6)
-                     AS rms,
-                   round((pk / 32768.0)::REAL::DOUBLE, 6) AS peak,
-                   round((z.crossings::DOUBLE / (n / ch - 1))::REAL::DOUBLE, 6)
-                     AS zcr,
-                   round(((s1::DOUBLE / n + 32768.0) / 65536.0)::REAL::DOUBLE, 6)
-                     AS dc,
-                   round((nz::DOUBLE / n)::REAL::DOUBLE, 6) AS fill
-            FROM agg a JOIN zc z ON a.media_id = z.media_id
-            ORDER BY a.media_id
-        """,
-        # real MJPEG AVI frame sampling: constant 16x8 frames in the
-        # bit-exact flat-quantizer regime — stats derive from the color
-        # formula + the integer YCbCr roundtrip (half-UP rounding, same
-        # literals as the codec); only container byte lengths come from
-        # the encoder.  every_n=3 drives the per-video fan-out.
-        "multimodal_video_frames": f"""
-            WITH vids AS (
-              SELECT i::BIGINT AS media_id, (4 + (i % 5) * 2)::INT AS n_frames
-              FROM (SELECT unnest(generate_series(0, 11)) AS i)),
-            fr AS (
-              SELECT media_id, n_frames, t.f::INT AS frame_idx
-              FROM vids, unnest(generate_series(0, n_frames - 1, 3)) AS t(f)),
-            base AS (
-              SELECT media_id, n_frames, frame_idx,
-                     (media_id * 11 + 29 * frame_idx) % 256 AS r0,
-                     (media_id * 11 + 29 * frame_idx + 85) % 256 AS g0,
-                     (media_id * 11 + 29 * frame_idx + 170) % 256 AS b0
-              FROM fr),
-            yc AS (
-              SELECT *,
-                least(255, greatest(0, floor(
-                  0.299 * r0 + 0.587 * g0 + 0.114 * b0 + 0.5))) AS yy,
-                least(255, greatest(0, floor(
-                  -0.168736 * r0 - 0.331264 * g0 + 0.5 * b0 + 128 + 0.5))) AS cb,
-                least(255, greatest(0, floor(
-                  0.5 * r0 - 0.418688 * g0 - 0.081312 * b0 + 128 + 0.5))) AS cr
-              FROM base),
-            rgb AS (
-              SELECT media_id, n_frames, frame_idx,
-                least(255, greatest(0, floor(
-                  yy + 1.402 * (cr - 128) + 0.5))) / 255.0 AS r,
-                least(255, greatest(0, floor(
-                  yy - 0.344136 * (cb - 128) - 0.714136 * (cr - 128) + 0.5
-                  ))) / 255.0 AS g,
-                least(255, greatest(0, floor(
-                  yy + 1.772 * (cb - 128) + 0.5))) / 255.0 AS b
-              FROM yc),
-            -- animated-GIF half (media_id 12-23): LOSSLESS decode, so
-            -- the raw color formula IS the decoded pixel — no YCbCr
-            gvids AS (
-              SELECT (12 + i)::BIGINT AS media_id,
-                     (3 + (i % 5) * 2)::INT AS n_frames
-              FROM (SELECT unnest(generate_series(0, 11)) AS i)),
-            grgb AS (
-              SELECT media_id, n_frames, t.f::INT AS frame_idx,
-                     ((media_id * 13 + 31 * t.f) % 256) / 255.0 AS r,
-                     ((media_id * 13 + 31 * t.f + 85) % 256) / 255.0 AS g,
-                     ((media_id * 13 + 31 * t.f + 170) % 256) / 255.0 AS b
-              FROM gvids, unnest(generate_series(0, n_frames - 1, 3)) AS t(f)),
-            allf AS (
-              SELECT * FROM rgb UNION ALL SELECT * FROM grgb)
-            SELECT media_id, frame_idx, n_frames,
-                   (CASE WHEN media_id < 12 THEN
-                      list_extract({_avi_byte_lens()}, media_id + 1)
-                    ELSE
-                      list_extract({_gif_video_byte_lens()}, media_id - 11)
-                    END)::INT AS n_bytes,
-                   round((16 / 4096.0)::REAL::DOUBLE, 6) AS f_w,
-                   round((8 / 4096.0)::REAL::DOUBLE, 6) AS f_h,
-                   round(r::REAL::DOUBLE, 6) AS mean_r,
-                   round(g::REAL::DOUBLE, 6) AS mean_g,
-                   round(b::REAL::DOUBLE, 6) AS mean_b,
-                   round(0.0::REAL::DOUBLE, 6) AS std_luma,
-                   round((16.0 / 24.0)::REAL::DOUBLE, 6) AS aspect,
-                   round(CASE WHEN greatest(r, g, b) > 0 THEN 1.0 ELSE 0.0
-                     END::REAL::DOUBLE, 6) AS fill_ratio
-            FROM allf ORDER BY media_id, frame_idx
-        """,
-        "multimodal_features": """
-            WITH ids AS (SELECT unnest(generate_series(0, 63)) AS i),
-            p AS (SELECT i,
-              substr(repeat(md5('media' || i::VARCHAR), 3 + i % 8),
-                     1, 32 + (i % 5) * 16) AS payload
-              FROM ids),
-            h AS (SELECT i, length(payload) AS n_bytes, md5(payload) AS fh FROM p)
-            SELECT i::BIGINT AS media_id,
-              (case when i % 3 = 0 then 'image'
-                    when i % 3 = 1 then 'audio' else 'video' end) AS modality,
-              n_bytes::INT AS n_bytes,
-              md5(array_to_string(list_transform(generate_series(0, 7), k ->
-                (('0x' || substr(fh, 4*k+1, 2))::INT
-                 + 256 * ('0x' || substr(fh, 4*k+3, 2))::INT)::VARCHAR), ',')) AS feature_hash
-            FROM h ORDER BY media_id
-        """,
-        "multimodal_resize": """
-            WITH ids AS (SELECT unnest(generate_series(0, 63)) AS i),
-            p AS (SELECT i,
-              substr(repeat(md5('media' || i::VARCHAR), 3 + i % 8),
-                     1, 32 + (i % 5) * 16) AS payload,
-              (case when i % 3 = 0 then 'image'
-                    when i % 3 = 1 then 'audio' else 'video' end) AS modality,
-              16 + i % 64 AS w, 16 + (i * 7) % 64 AS h
-              FROM ids),
-            r AS (SELECT i, modality,
-              CASE WHEN modality = 'image' THEN md5(payload || '224x224')
-                   ELSE payload END AS rp,
-              CASE WHEN modality = 'image' THEN 224 ELSE w END AS mw,
-              CASE WHEN modality = 'image' THEN 224 ELSE h END AS mh
-              FROM p)
-            SELECT i::BIGINT AS media_id, modality, mw::INT AS meta_width,
-                   mh::INT AS meta_height, length(rp)::INT AS n_bytes,
-                   md5(rp) AS payload_md5
-            FROM r ORDER BY media_id
-        """,
-        # replays synth_media's video durations (24 + 5i mod 40) and the
-        # every-Nth-frame sequence — row counts CHANGE with every_n
-        # (multimodal.py frame_sample_plan, VERDICT r02 #3)
-        "multimodal_frame_sample": """
-            WITH ids AS (SELECT unnest(generate_series(0, 63)) AS i),
-            v AS (SELECT i, 24 + (i * 5) % 40 AS dur FROM ids WHERE i % 3 = 2),
-            fx AS (SELECT i, unnest(generate_series(0, dur - 1, 10)) AS frame_idx
-                   FROM v)
-            SELECT i::BIGINT AS media_id, frame_idx::INT AS frame_idx,
-                   10 AS sample_every, 'fake' AS meta_codec
-            FROM fx ORDER BY media_id, frame_idx
         """,
     }
     # The *_bounded formulations are SEMANTICS-IDENTICAL to their

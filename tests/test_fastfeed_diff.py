@@ -142,6 +142,27 @@ ADVERSARIAL = [
     "<![CDATA[open&#z;<i>x</i>",
     "<a b='c>x&#z;y&#q;<b>two bails</b>",
     "&#z;<a b='c>x&#q;<b>bail then construct</b>",
+    # MAX_DEPTH (512) overflow: fastfeed fuses its own copy of the dom
+    # handlers' overflow bookkeeping, so pin it on every overflow path
+    # -- more than 512 nested opens, matching closes interleaved
+    "<div><b>x</b>" * 600 + "<p>deep</p>" + "</div>" * 600,
+    "<div>" * 515 + "<p>a</p><span>b</span>" + "</div>" * 3 + "<i>c</i>"
+    + "</div>" * 520 + "<p>after</p>",
+    "<div>" * 511 + "<section><em>1</em>" * 4 + "</section>" * 4 + "<p>x</p>",
+    # -- self-closing and void tags past the cap
+    "<div>" * 515 + "<br/><img src='x'/><span/><a href='y'/>t<br>u<hr>"
+    + "</div>" * 515,
+    "<div>" * 520 + "<p/>" * 3 + "</p>" + "<p>x</p>" + "</div>" * 2,
+    # -- stray closes of overflowed tags
+    "<div>" * 511 + "<section>" * 3 + "</section>" * 5 + "<p>after</p>",
+    "<div>" * 520 + "</span>" + "x" + "</div></span>" + "<p>y</p>",
+    "<div>" * 511 + "<em>a" + "</em>" * 3 + "<em>b</em>" + "</div>" * 2 + "z",
+    # -- an overflowed tag named again after a real close resets the
+    # overflow list
+    "<div>" * 510 + "<section>" + "<em>" * 5 + "</section>" + "<em>y</em>"
+    + "</em>" + "<em>" * 3 + "</em>" + "<p>z</p>",
+    "<div>" * 510 + "<section>" + "<em>" * 5 + "</div>" + "</em>" * 2
+    + "<em>w</em>" + "<section>" * 3 + "</em></section>" + "<p>v</p>",
 ]
 
 

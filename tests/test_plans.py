@@ -715,3 +715,76 @@ def test_pmi_bigrams_text_stays_out_of_exchanges(spark, tmp_path):
     for m in _re.finditer(r"\(\d+\) Exchange\b.*?(?=\n\(\d+\)|\Z)", plan, _re.S):
         assert "text#" not in m.group(0)
     assert _node_ids(plan, "CartesianProduct") == 0
+
+
+def _plan_nodes(plan: str) -> list[tuple[str, str]]:
+    """(node name, details) per node of a formatted plan, in node-id
+    order — a scan's parent is numbered right after it."""
+    import re as _re
+
+    return _re.findall(r"^\(\d+\) ([^\n]*)\n((?:.+\n?)*)", plan, _re.M)
+
+
+def _scan_filter_conditions(plan: str) -> list[str]:
+    nodes = _plan_nodes(plan)
+    return [
+        details.split("Condition : ", 1)[1].split("\n", 1)[0]
+        for (prev, _), (name, details) in zip(nodes, nodes[1:])
+        if prev.startswith("Scan") and name.startswith("Filter")
+    ]
+
+
+def test_zero_token_guards_keep_tokenize_out_of_scan_filters(spark, tmp_path):
+    """Four text operators drop zero-token docs with a cheap ``text
+    RLIKE '\\S'`` scan Filter.  An explode of a bare array column lets
+    InferFiltersFromGenerate add ``size(col) > 0`` there, which
+    re-runs the tokenize (or the md5 hashing and minhash) on every
+    scanned row — so no scan Filter may hold md5, transform or split."""
+    from webtext_extraction_spark.operators.textstats import bm25_topk, repetition_profile
+
+    p = str(tmp_path / "docs_guards")
+    spark.createDataFrame(
+        [(i, "alpha beta gamma delta word%d" % (i % 4)) for i in range(12)],
+        ["doc_id", "text"],
+    ).write.parquet(p)
+    docs = spark.read.parquet(p)
+    qs = spark.createDataFrame([(1, "alpha gamma")], ["query_id", "query_text"])
+    ops = {
+        "minhash_lsh_pairs": dedup.minhash_lsh_pairs(docs, "doc_id", "text", 8, 4, 0.1),
+        "bm25_topk": bm25_topk(docs, "doc_id", "text", qs, k=3),
+        "repetition_profile": repetition_profile(docs, "doc_id", "text"),
+        "containment_pairs": dedup.containment_pairs(docs, "doc_id", "text"),
+    }
+    for name, df in ops.items():
+        conds = _scan_filter_conditions(_plan(df))
+        assert conds, name
+        for cond in conds:
+            assert "RLIKE" in cond, (name, cond)
+            for fn in ("md5(", "transform(", "split("):
+                assert fn not in cond, (name, cond)
+
+
+def test_minhash_fences_hold(spark, tmp_path):
+    """The two Catalyst fences in minhash_lsh_pairs: the band buckets
+    posexplode an inline array (a materialized column would let
+    InferFiltersFromGenerate re-inline the minhash into the scan
+    filter), and the Jaccard sits behind ``explode(array(jac))`` so
+    the threshold never joins the join condition and array_intersect
+    runs once per candidate pair."""
+    p = str(tmp_path / "docs_minhash")
+    spark.createDataFrame(
+        [(i, f"w{i % 5} common tokens here") for i in range(20)], ["doc_id", "text"]
+    ).write.parquet(p)
+    plan = _plan(dedup.minhash_lsh_pairs(spark.read.parquet(p), "doc_id", "text", 8, 4, 0.1))
+    nodes = _plan_nodes(plan)
+    gens = [d for n, d in nodes if n.startswith("Generate")]
+    assert any("posexplode(array(concat_ws(" in d for d in gens)
+    barrier = [d for d in gens if "explode(array(round(" in d]
+    assert len(barrier) == 1 and "array_intersect" in barrier[0]
+    joins = [d for n, d in nodes if "Join" in n]
+    assert joins
+    for d in joins:
+        assert "array_intersect" not in d
+    filters = [d for n, d in nodes if n.startswith("Filter")]
+    assert not any("array_intersect" in d for d in filters)
+    assert any("jaccard" in d and ">= 0.1" in d for d in filters)

@@ -168,3 +168,30 @@ def test_decompose_all_adjacent_chain_sequential_semantics():
     dom = parse('<html><body><p class="x y">a</p><p class="z">keep</p></body></html>')
     decompose_all(dom.body, [".x", ".y + .z"])
     assert [el.get_text() for el in dom.select("p")] == ["keep"]
+
+
+def test_cached_selector_values_are_immutable():
+    """The lru_cached parse and decompose-set values are shared by
+    every page; a caller that mutates one must fail loudly rather than
+    change how later pages are cleaned."""
+    import pytest
+
+    from webtext_extraction_spark.html.selector import _compile_decompose_set
+
+    tags, classes, chains, _ = _compile_decompose_set(
+        ("script", ".ad", "div.x span", "[data-x='1']")
+    )
+    assert "script" in tags and "ad" in classes and len(chains) == 2
+    with pytest.raises(AttributeError):
+        tags.add("p")
+    with pytest.raises(AttributeError):
+        classes.discard("ad")
+    with pytest.raises(AttributeError):
+        chains.append(chains[0])
+    groups = _parse_selector("div.x span, #main[role='main']")
+    with pytest.raises(AttributeError):
+        groups.append(groups[0])
+    with pytest.raises(TypeError):
+        groups[0][0] = None
+    with pytest.raises(AttributeError):
+        groups[1][0][1].attrs.append(("role", "=", "nav"))

@@ -45,7 +45,7 @@ class _Compound:
         self.tag = tag
         self.classes = classes
         self.ids = ids
-        self.attrs = attrs  # list of (name, op, value); op in {"=", "*="}
+        self.attrs = attrs  # tuple of (name, op, value); op in {"=", "*="}
 
     def matches(self, el) -> bool:
         if self.tag and self.tag != "*" and el.name != self.tag:
@@ -84,7 +84,7 @@ def _parse_compound(token: str) -> _Compound:
                 raise ValueError(f"unsupported attribute selector: [{cm.group(3)}]")
             value = next(v for v in am.groups()[2:] if v is not None)
             attrs.append((am.group(1), am.group(2), value))
-    return _Compound(m.group("tag"), classes, ids, attrs)
+    return _Compound(m.group("tag"), tuple(classes), tuple(ids), tuple(attrs))
 
 
 def _tokenize(alt: str) -> list[str]:
@@ -132,9 +132,10 @@ def _split_groups(selector: str) -> list[str]:
 
 @lru_cache(maxsize=512)
 def _parse_selector(selector: str):
-    """Parse into a list of alternatives; each alternative is a list of
-    (combinator, _Compound) with combinator in {'descendant', 'adjacent'}
-    applied between the previous compound and this one."""
+    """Parse into a tuple of alternatives; each alternative is a tuple
+    of (combinator, _Compound) with combinator in {'descendant',
+    'adjacent'} applied between the previous compound and this one.
+    Immutable because the result is cached and shared by every page."""
     groups = []
     for alt in _split_groups(selector):
         alt = alt.strip()
@@ -150,8 +151,8 @@ def _parse_selector(selector: str):
             chain.append((combinator, _parse_compound(tok)))
             combinator = "descendant"
         if chain:
-            groups.append(chain)
-    return groups
+            groups.append(tuple(chain))
+    return tuple(groups)
 
 
 def _chain_matches(el, chain, idx) -> bool:
@@ -178,7 +179,8 @@ def _compile_decompose_set(selectors: tuple[str, ...]):
     """Split a selector batch into (simple_tags, simple_classes,
     complex_chains, has_adjacent) — pure function of the selector
     strings, memoized because the built-in unwanted-selector batches
-    are fixed lists applied once per extracted page."""
+    are fixed lists applied once per extracted page.  The frozensets
+    and tuple are shared by every page, so they are immutable."""
     has_adjacent = any(
         comb == "adjacent"
         for s in selectors
@@ -200,7 +202,10 @@ def _compile_decompose_set(selectors: tuple[str, ...]):
                         simple_classes.add(c.classes[0])
                         continue
                 complex_chains.append(chain)
-    return simple_tags, simple_classes, complex_chains, has_adjacent
+    return (
+        frozenset(simple_tags), frozenset(simple_classes), tuple(complex_chains),
+        has_adjacent,
+    )
 
 
 def decompose_all(root, selectors: list[str]) -> None:

@@ -618,10 +618,13 @@ def containment_pairs(
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     if rare_k < 1:
         raise ValueError(f"rare_k must be >= 1, got {rare_k}")
-    sets = df.filter(F.col(text_col).rlike(r"\S")).select(
-        F.col(id_col).alias("_id"), hashed_word_set(F.col(text_col)).alias("_hs")
-    )
-    toks = sets.select("_id", F.explode("_hs").alias("_th"))
+    live = df.filter(F.col(text_col).rlike(r"\S"))
+    hs = hashed_word_set(F.col(text_col))
+    sets = live.select(F.col(id_col).alias("_id"), hs.alias("_hs"))
+    # explode the expression, never the bare _hs column:
+    # InferFiltersFromGenerate would push size(_hs) > 0 into the scan
+    # filter and re-run the md5 tokenize on every row (plan-audited)
+    toks = live.select(F.col(id_col).alias("_id"), F.explode(hs).alias("_th"))
     dfreq = toks.groupBy("_th").agg(F.count("*").cast("long").alias("_dft"))
     w = Window.partitionBy("_id").orderBy("_dft", "_th")
     rare = (

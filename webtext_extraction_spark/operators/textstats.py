@@ -543,14 +543,13 @@ def unigram_logprob(
     documented — supply the artifact for the one-scan path).
 
     Cross-engine exactness (the part that makes this oracle-able):
-    per-token logprobs are rounded to 6 dp FIRST, then summed with
-    ``F.aggregate`` over a (token-hash)-sorted array — both engines
-    add the same doubles in the same order, so the sum is
-    bit-identical despite float addition being non-associative (a
-    plain groupBy avg would sum in partition order and flap at the
-    rounding boundary).  Equal sort keys carry equal values, so ties
-    commute.  OOV tokens (possible only with a supplied ``freqs``)
-    back off to ln(0.5/total).
+    per-token logprobs are rounded to 6 dp FIRST and summed as
+    integer micro-units, so the sum is exact in any order; the mean
+    is that integer over ``n_tokens``, rounded half away from zero in
+    integer arithmetic.  No float division is ever rounded, so no
+    engine's double-rounding rule can split a .5e-6 tie.  OOV tokens
+    (possible only with a supplied ``freqs``) back off to
+    ln(0.5/total).
 
     Shape: explode → [inline learn: groupBy th] → join on th →
     groupBy doc.  Shuffles carry hashes and counts, never text.  The
@@ -591,15 +590,15 @@ def unigram_logprob(
     )
     agg = scored.groupBy("_id").agg(
         F.count("*").cast("int").alias("n_tokens"),
-        F.array_sort(F.collect_list(F.struct("th", "lp"))).alias("_tl"),
+        F.sum(F.round(F.col("lp") * 1_000_000).cast("long")).alias("_s"),
     )
-    sum_lp = F.aggregate(
-        F.col("_tl"), F.lit(0.0), lambda acc, s: acc + s["lp"]
-    )
+    # |s| / n rounded half away from zero: floor((2|s| + n) / 2n)
+    q = F.expr("(2 * abs(_s) + n_tokens) div (2 * n_tokens)")
+    mean_micro = F.when(F.col("_s") < 0, -q).otherwise(q)
     return agg.select(
         F.col("_id").alias(id_col),
         "n_tokens",
-        F.round(sum_lp / F.col("n_tokens"), 6).cast("double").alias("logprob_mean"),
+        (mean_micro / F.lit(1_000_000.0)).alias("logprob_mean"),
     )
 
 
@@ -619,8 +618,8 @@ def ccnet_buckets(
     cutoffs are tertiles; pass e.g. ``(0.1, 0.5)`` for an asymmetric
     split.
 
-    Cross-engine exactness: logprob_mean is the round-6 sorted-sum
-    value (unigram_logprob's rule), the two thresholds are EXACT
+    Cross-engine exactness: logprob_mean is the integer-rational
+    mean of unigram_logprob, the two thresholds are EXACT
     percentile_cont values computed by :func:`global_percentiles`
     (round 6), and bucket assignment compares ROUNDED value to
     ROUNDED threshold with ``>=`` — a doc sitting exactly on a cut
@@ -1288,11 +1287,11 @@ def token_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     Cross-engine exactness: ``H = log2(n) - (sum_t c_t*log2(c_t))/n``
     with each ``c*log2(c)`` term rounded to 6 dp FIRST, then summed in
-    token-hash-sorted order (unigram_logprob's sorted-sum rule;
-    after the count groupBy, token hashes are UNIQUE per document, so
-    the sort order is total and both engines add identical doubles in
-    an identical order).  ``c = 1`` contributes exactly ``0.0`` on
-    both engines; a doc of n copies of one token scores exactly 0.
+    token-hash-sorted order (after the count groupBy, token hashes
+    are UNIQUE per document, so the sort order is total and both
+    engines add identical doubles in an identical order).  ``c = 1``
+    contributes exactly ``0.0`` on both engines; a doc of n copies of
+    one token scores exactly 0.
 
     Shape: one tokenize, one explode of HASHED tokens (8-byte rows —
     text never shuffles), groupBy (id, hash) with map-side partial
@@ -1988,9 +1987,12 @@ def bm25_topk(
     base = df.filter(F.col(text_col).rlike(r"\S")).select(
         F.col(id_col).alias("_id"), words(F.col(text_col)).alias("_ws")
     )
+    # explode behind a one-row struct array, never the bare _ws column:
+    # InferFiltersFromGenerate would push size(_ws) > 0 into the scan
+    # filter and tokenize every row a second time (plan-audited)
     toks = base.select(
-        "_id", F.size("_ws").alias("_dl"), F.explode("_ws").alias("term")
-    )
+        "_id", F.inline(F.array(F.struct(F.size("_ws").alias("_dl"), "_ws")))
+    ).select("_id", "_dl", F.explode("_ws").alias("term"))
     tf = toks.groupBy("_id", "_dl", "term").agg(
         F.count("*").cast("long").alias("_tf")
     )
