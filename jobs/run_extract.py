@@ -6,16 +6,18 @@ Cluster usage (north rule: multi-executor, N and 4N):
     spark-submit --py-files engine.zip \\
         --num-executors $N --executor-cores 4 \\
         jobs/run_extract.py \\
-        --input <parquet-or-iceberg path/table> \\
+        --input <transcripts parquet path> \\
         --output /data/extracted \\
         --num-buckets 512 --write-partitions 4096
 
 Config precedence (reference analogue W:1758-1789: CLI > config.ini >
 default): CLI args > spark conf > defaults.  The job is resumable:
-re-running with the same --output skips lineage-committed buckets.
-On an Iceberg deployment, --input takes a table identifier and the
-scan becomes ``spark.read.format("iceberg").load(...)`` — everything
-downstream is unchanged.
+re-running with the same --output skips lineage-committed buckets,
+and refuses to resume under a different --input-snapshot or --rules.
+--input is a parquet path, read with ``spark.read.parquet``.  An Iceberg
+table is the experimental ``sources.transcripts.open_transcripts(spark,
+table, "iceberg")`` path, which needs the Iceberg runtime jars on the
+Spark classpath; this job does not call it.
 """
 
 from __future__ import annotations

@@ -56,3 +56,65 @@ def test_gate_canonicalizer_detects_drift():
     d = mod.norm_rows(["id", "val", "tag"], list(reversed(rows)))
     assert a == d
     assert mod.norm_cell(True) == "true" and mod.norm_cell(None) == "None"
+
+
+def test_every_engine_module_is_reachable_from_an_entry_point():
+    """Every engine module must be imported, directly or transitively,
+    from an entry point: the driver contract, a job, a benchmark or a
+    script.  Imports inside functions count.  A module nothing reaches
+    is dead code and fails here instead of drifting untested."""
+    root = pathlib.Path(entrymod.__file__).resolve().parent
+    pkg = "webtext_extraction_spark"
+
+    def module_file(name):
+        base = root.joinpath(*name.split("."))
+        for path in (base.with_suffix(".py"), base / "__init__.py"):
+            if path.is_file():
+                return path
+        return None
+
+    def module_name(path):
+        parts = path.relative_to(root).with_suffix("").parts
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    def imported_modules(path):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        package = module_name(path)
+        if path.name != "__init__.py":
+            package = package.rpartition(".")[0]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                yield from (alias.name for alias in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    anchor = package.rsplit(".", node.level - 1)[0]
+                    base = f"{anchor}.{base}" if base else anchor
+                yield base
+                # ``from pkg import submodule`` names a module too
+                yield from (f"{base}.{alias.name}" for alias in node.names)
+
+    entries = [root / "__spark_entry__.py", root / "bench.py", root / "bench_extra.py"]
+    for folder in ("jobs", "scripts", "perfbench"):
+        entries += sorted((root / folder).glob("*.py"))
+    reached, todo = set(), list(entries)
+    while todo:
+        for name in imported_modules(todo.pop()):
+            if not (name == pkg or name.startswith(pkg + ".")):
+                continue
+            # importing a.b.c also imports a and a.b
+            parts = name.split(".")
+            for i in range(1, len(parts) + 1):
+                sub = ".".join(parts[:i])
+                path = module_file(sub)
+                if path is not None and sub not in reached:
+                    reached.add(sub)
+                    todo.append(path)
+
+    engine = {
+        module_name(path)
+        for path in (root / pkg).rglob("*.py")
+        if path.name != "__init__.py"
+    }
+    unreached = sorted(engine - reached)
+    assert not unreached, f"engine modules no entry point imports: {unreached}"

@@ -1,19 +1,16 @@
 """Portable Bloom filter (operators/membership.py): bitmap vs a pure
-python replay, no-false-negative guarantee, merge≡union-build,
-bloom-gated decontamination parity with the exact operator, and the
-broadcast plan shape of the probe side."""
+python replay, bloom-gated decontamination parity with the exact
+operator, and the broadcast plan shape of its sketch probe."""
 
 import hashlib
 
 import pytest
 from pyspark.sql import functions as F
 
-from webtext_extraction_spark.operators import contamination, membership
+from webtext_extraction_spark.operators import contamination
 from webtext_extraction_spark.operators.membership import (
     BITS_PER_WORD,
     bloom_build,
-    bloom_merge,
-    bloom_probe,
     decontaminate_bloom,
 )
 
@@ -34,17 +31,6 @@ def _py_bloom(values, m_words, k):
     return out
 
 
-def _py_hit(bitmap, v, m_words, k):
-    m_bits = m_words * BITS_PER_WORD
-    h = hashlib.md5(v.encode("utf-8")).hexdigest()
-    h1, h2 = int(h[:15], 16), int(h[15:30], 16)
-    return all(
-        (bitmap.get(((h1 + i * h2) % m_bits) // BITS_PER_WORD, 0)
-         >> (((h1 + i * h2) % m_bits) % BITS_PER_WORD)) & 1
-        for i in range(k)
-    )
-
-
 VALUES = ["apple pie", "banana", "cherry tart", "日本語 テスト", "x", ""]
 
 
@@ -63,32 +49,6 @@ def test_null_values_excluded(spark):
     assert got == _py_bloom(["a"], 8, 3)
 
 
-def test_probe_no_false_negatives_and_python_parity(spark):
-    ins = [f"doc-{i}" for i in range(200)]
-    df = spark.createDataFrame([(v,) for v in ins], ["v"])
-    sk = bloom_build(df, "v", m_words=8, k=4)  # deliberately tiny → FPs
-    probes = ins[:20] + [f"absent-{i}" for i in range(200)]
-    pdf = spark.createDataFrame([(v,) for v in probes], ["t"])
-    got = {r["value"]: r["bloom_hit"] for r in
-           bloom_probe(pdf, "t", sk, m_words=8, k=4).collect()}
-    bitmap = _py_bloom(ins, 8, 4)
-    assert all(got[v] for v in ins[:20])  # membership is never missed
-    assert all(got[v] == _py_hit(bitmap, v, 8, 4) for v in probes)
-    # the tiny sizing really does produce false positives (non-vacuous)
-    assert any(got[f"absent-{i}"] for i in range(200))
-
-
-def test_merge_equals_union_build(spark):
-    a = spark.createDataFrame([(f"a{i}",) for i in range(50)], ["v"])
-    b = spark.createDataFrame([(f"b{i}",) for i in range(50)], ["v"])
-    merged = {r["word_idx"]: r["word"] for r in
-              bloom_merge(bloom_build(a, "v", 32, 4),
-                          bloom_build(b, "v", 32, 4)).collect()}
-    together = {r["word_idx"]: r["word"] for r in
-                bloom_build(a.union(b), "v", 32, 4).collect()}
-    assert merged == together
-
-
 def test_param_validation(spark):
     df = spark.createDataFrame([("a",)], ["v"])
     with pytest.raises(ValueError, match="m_words"):
@@ -97,7 +57,7 @@ def test_param_validation(spark):
         # k=8 would let h1 + 7*h2 reach 2^63 — the DuckDB-overflow bound
         bloom_build(df, "v", m_words=8, k=8)
     with pytest.raises(ValueError, match="k must be"):
-        bloom_probe(df, "v", bloom_build(df, "v", 8, 3), m_words=8, k=0)
+        bloom_build(df, "v", m_words=8, k=0)
 
 
 def _mini_corpus(spark):
@@ -149,11 +109,25 @@ def test_decontaminate_bloom_zero_gram_docs(spark):
 
 
 def test_probe_plan_broadcasts_sketch(spark):
-    """The sketch side of the probe join must broadcast — the 100 TB
-    side never shuffles for a membership test."""
-    df = spark.createDataFrame([(f"v{i}",) for i in range(100)], ["v"])
-    sk = bloom_build(df, "v", m_words=64, k=4)
-    plan = bloom_probe(df, "v", sk, m_words=64, k=4)._jdf.queryExecution(
-    ).explainString(spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    """decontaminate_bloom's sketch probe join must broadcast — the
+    100 TB gram side never shuffles for a membership test.  Automatic
+    broadcasting is off, so only the operator's own hint can plan it."""
+    import re
+
+    docs = _mini_corpus(spark)
+    out = decontaminate_bloom(docs.filter(F.col("doc_id") < 10),
+                              docs.filter(F.col("doc_id") >= 10),
+                              "doc_id", "text", n=3, m_words=64, k=4)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        plan = out._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    # formatted node details: "(n) <JoinNode>\nLeft keys [k]: [<col>#id, ..."
+    joins = re.findall(r"\(\d+\) (\w+Join)\s*\nLeft keys \[\d+\]: \[(\w+)#", plan)
+    sketch_joins = [node for node, key in joins if key == "word_idx"]
+    assert sketch_joins, plan
+    assert set(sketch_joins) == {"BroadcastHashJoin"}, plan

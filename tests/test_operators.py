@@ -1675,41 +1675,6 @@ def test_canonical_url_matches_python_reference_randomized(spark):
         assert got[i] == py_canon(u), (i, u, got[i], py_canon(u))
 
 
-def test_ivf_tune_n_probe_monotone_and_reaches_full_recall(spark):
-    import random
-
-    rnd = random.Random(3)
-    # clustered vectors: 4 tight clusters of 10 in 8-dim space
-    rows = []
-    vid = 0
-    for c in range(4):
-        center = [10.0 * (1 if (c >> b) & 1 else -1) for b in range(3)] + [0.0] * 5
-        for _ in range(10):
-            rows.append((vid, [x + rnd.uniform(-0.5, 0.5) for x in center]))
-            vid += 1
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = similarity.ivf_tune_n_probe(
-        emb, query_ids=[0, 10, 20], k=3, target_recall=1.0, n_cells=4
-    )
-    curve = dict(out["curve"])
-    # recall is monotone non-decreasing in n_probe and hits 1.0 by
-    # the time every cell is probed
-    probes = sorted(curve)
-    assert all(curve[probes[i]] <= curve[probes[i + 1]] for i in range(len(probes) - 1))
-    assert out["recall"] == 1.0
-    assert out["n_probe"] <= 4
-    with pytest.raises(ValueError):
-        similarity.ivf_tune_n_probe(emb, query_ids=[], k=3)
-    # ADVICE r04: max_n_probe < 1 must raise, not return None
-    with pytest.raises(ValueError, match="max_n_probe"):
-        similarity.ivf_tune_n_probe(emb, query_ids=[0], k=3, max_n_probe=0)
-    # max_n_probe beyond n_cells clamps to full probe, still a dict
-    out2 = similarity.ivf_tune_n_probe(
-        emb, query_ids=[0], k=3, target_recall=1.0, n_cells=4, max_n_probe=99
-    )
-    assert out2["n_probe"] <= 4
-
-
 def test_exact_duplicates_normalize_ws(spark):
     """ADVICE r04: with normalize_ws=True, whitespace-only docs with
     differing bytes (and docs differing only in whitespace runs) gain

@@ -208,37 +208,6 @@ def test_extraction_keeps_status_filter_jvm_side(spark, tmp_path):
     assert _n_arrow_stages(plan) == 1
 
 
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    """Two tables bucketed on conv_id with equal bucket counts must
-    sort-merge join with NO Exchange on either side — the pay-the-
-    shuffle-once-at-write-time contract (sources/bucketed.py)."""
-    from webtext_extraction_spark.sources.bucketed import (
-        colocated_join,
-        write_bucketed_table,
-    )
-
-    t = synth_transcripts(spark, num_conversations=30)
-    ex = t.select("conv_id", F.length("text").alias("n_chars"))
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # the test tables are tiny enough to broadcast; disable that so
-        # the plan shows what bucketing buys at scale (where neither
-        # side broadcasts)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed_table(t, "bk_transcripts", path=str(tmp_path / "bt"), num_buckets=8)
-        write_bucketed_table(ex, "bk_extracted", path=str(tmp_path / "be"), num_buckets=8,
-                             sort_cols=("conv_id",))
-        joined = colocated_join(spark, "bk_transcripts", "bk_extracted")
-        plan = _plan(joined.select("conv_id", "turn_idx", "n_chars"))
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange" not in plan, plan  # neither shuffle nor broadcast
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        spark.sql("DROP TABLE IF EXISTS bk_transcripts")
-        spark.sql("DROP TABLE IF EXISTS bk_extracted")
-
-
 def _node_ids(plan: str, node: str) -> int:
     # the tree line is "<node> [<table>] (<id>)" — the optional table
     # identifier (empty for path reads → double space) sits between

@@ -20,6 +20,7 @@ from webtext_extraction_spark.plans.lineage import (
     run_extraction,
 )
 from webtext_extraction_spark.plans.pipeline import extraction_pipeline, render_extracted
+from webtext_extraction_spark.rules import DOMAIN_SELECTORS
 from webtext_extraction_spark.sources.transcripts import synth_transcripts
 
 N_CONV = 40
@@ -159,8 +160,9 @@ def test_render_q8_header_matches_golden(extracted):
 
 
 def test_resume_detects_changed_input_snapshot(spark, transcripts, tmp_path):
-    """A resume handed a different input_snapshot must raise, not mix
-    two input versions into one output (lineage.run_extraction)."""
+    """A resume handed a different input_snapshot or different rules
+    must raise, not mix two input or rule versions into one output
+    (lineage.run_extraction)."""
     out = str(tmp_path / "snap")
     run_extraction(
         spark, transcripts, out, num_buckets=8, buckets_per_commit=3,
@@ -169,6 +171,13 @@ def test_resume_detects_changed_input_snapshot(spark, transcripts, tmp_path):
     with pytest.raises(ValueError, match="different input snapshot"):
         run_extraction(
             spark, transcripts, out, num_buckets=8, input_snapshot="snap-B"
+        )
+    # same snapshot, changed rules (a --rules override): refused too
+    changed = dict(DOMAIN_SELECTORS, **{"changed.example": [".body"]})
+    with pytest.raises(ValueError, match="different rules"):
+        run_extraction(
+            spark, transcripts, out, num_buckets=8, input_snapshot="snap-A",
+            site_rules=changed,
         )
     # same snapshot resumes fine
     r = run_extraction(
@@ -185,9 +194,13 @@ def test_write_parallelism_decoupled_from_buckets(spark, transcripts, tmp_path):
     import glob
 
     out = str(tmp_path / "wide")
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(mode_key, "static")
     run_extraction(
         spark, transcripts, out, num_buckets=2, write_partitions=12
     )
+    # dynamic overwrite is the writer's option, not a session side effect
+    assert spark.conf.get(mode_key).lower() == "static"
     for b in (0, 1):
         files = glob.glob(f"{out}/data/bucket={b}/*.parquet")
         assert len(files) > 1, f"bucket {b} wrote {len(files)} file(s)"
@@ -238,19 +251,15 @@ def test_resume_idempotent(spark, transcripts, tmp_path):
 
 
 def test_resume_broadcast_anti_join_at_high_bucket_counts(spark, transcripts, tmp_path):
-    """VERDICT r02 #9: above isin_max_literals the completed-bucket
-    filter is a broadcast left_anti join, not a giant isin literal —
-    and resume at 4096 buckets still completes idempotently."""
+    """VERDICT r02 #9: the completed-bucket filter is a broadcast
+    left_anti join, not a giant isin literal — and resume at 4096
+    buckets still completes idempotently."""
     out = str(tmp_path / "hibuck")
-    # force the anti-join path with a tiny threshold
     r1 = run_extraction(
-        spark, transcripts, out, num_buckets=4096, buckets_per_commit=5,
-        isin_max_literals=0,
+        spark, transcripts, out, num_buckets=4096, buckets_per_commit=5
     )
     assert r1["buckets_done"] == 5
-    r2 = run_extraction(
-        spark, transcripts, out, num_buckets=4096, isin_max_literals=0
-    )
+    r2 = run_extraction(spark, transcripts, out, num_buckets=4096)
     total_buckets = (
         transcripts.select(
             F.pmod(F.xxhash64("conv_id"), F.lit(4096)).cast("int").alias("b")

@@ -13,6 +13,9 @@ All values pin reference behavior; citations are into
 
 from __future__ import annotations
 
+import hashlib
+import json
+
 RULE_VERSION = "r1.0"
 
 # ---------------------------------------------------------------------------
@@ -255,19 +258,16 @@ TARGET_DOMAINS = ["youtube.com"]
 YAHOO_IMAGE_SEARCH_PREFIX = "https://search.yahoo.co.jp/image/search"
 
 
-def rule_bundle() -> dict:
-    """Everything an executor needs, as one broadcastable dict."""
-    return {
-        "rule_version": RULE_VERSION,
-        "main_content_selectors": MAIN_CONTENT_SELECTORS,
-        "domain_selectors": DOMAIN_SELECTORS,
-        "unwanted_selectors": UNWANTED_SELECTORS,
-        "body_unwanted_selectors": BODY_UNWANTED_SELECTORS,
-        "selenium_body_unwanted": SELENIUM_BODY_UNWANTED,
-        "error_patterns": ERROR_PATTERNS,
-        "failure_templates": FAILURE_TEMPLATES_WITH_URL,
-        "failure_prefixes": FAILURE_PREFIXES,
-        "timeout_marker": TIMEOUT_MARKER,
-        "nav_phrases": NAV_PHRASES,
-        "content_indicators": CONTENT_INDICATOR_PATTERNS,
+def rule_fingerprint(site_rules: dict | None = None) -> str:
+    """Lineage ``rule_version``: RULE_VERSION (the kernel-semantics
+    version, bumped by hand) plus a content hash of every public rule
+    constant in this module and the runtime ``site_rules`` override, so
+    a resume under changed rules is detected rather than mixed."""
+    tables = {
+        name: value for name, value in globals().items()
+        if name.isupper() and not name.startswith("_")
     }
+    blob = json.dumps(
+        {"tables": tables, "site_rules": site_rules}, sort_keys=True, default=repr
+    )
+    return f"{RULE_VERSION}-{hashlib.md5(blob.encode('utf-8')).hexdigest()[:12]}"
